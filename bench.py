@@ -64,7 +64,6 @@ def stage_pages(spark, n_urls: int, workdir: str, n_hot: int = 4,
 
 
 def run_pipeline_e2e(spark, pages_path: str, sink_path: str,
-                     salt_hot_keys: bool = False,
                      typed_sink: bool = True) -> tuple[float, int]:
     """Timed: read pages → parse → sessionize → enrich → route → write."""
     from pyspark.sql import functions as F
@@ -74,8 +73,7 @@ def run_pipeline_e2e(spark, pages_path: str, sink_path: str,
         pages_to_lines, with_batch_seq)
 
     shutil.rmtree(sink_path, ignore_errors=True)
-    cfg = PipelineConfig(salt_hot_keys=salt_hot_keys,
-                         typed_sink=typed_sink)
+    cfg = PipelineConfig(typed_sink=typed_sink)
     t0 = time.monotonic()
     pages = spark.read.parquet(pages_path)
     lines = with_batch_seq(pages_to_lines(pages), 1)

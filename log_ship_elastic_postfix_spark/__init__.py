@@ -8,8 +8,8 @@ Spark DataFrame program over Common-Crawl-style web-page tables
 
 - syslog envelope + per-program grok grammars → JVM-side
   ``regexp_extract`` columns (whole-stage codegen, no per-row Python)
-- per-queue-id document assembly → ``groupBy(qid).applyInPandas``
-  sessionizer with salted two-phase fold for hot keys
+- per-queue-id document assembly → one ``repartition(qid)`` +
+  ``mapInPandas`` sessionizing fold
 - Redis/ES enrichment lookups → broadcast dimension joins
 - per-index Elasticsearch routing → fan-out partitioned sinks
 - bookmark file → lineage manifest + batch checkpoint table

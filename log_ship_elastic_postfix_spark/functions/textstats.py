@@ -56,19 +56,6 @@ def mean_word_length(text: Column) -> Column:
     return F.when(n > 0, total.cast("double") / n).otherwise(F.lit(0.0))
 
 
-def quality_score(text: Column) -> Column:
-    """Composite quality heuristic in [0,1]: rewards mid-length docs,
-    normal word lengths, some stopwords, low punctuation density.
-    Deterministic, documented, SQL-reproducible."""
-    n = token_count(text).cast("double")
-    len_score = F.least(n / 50.0, F.lit(1.0))
-    wl = mean_word_length(text)
-    wl_score = F.when((wl >= 3.0) & (wl <= 10.0), 1.0).otherwise(0.5)
-    sw_score = F.least(stopword_ratio(text) * 5.0, F.lit(1.0))
-    punct_pen = F.greatest(F.lit(0.0), F.lit(1.0) - punct_ratio(text) * 5.0)
-    return F.round((len_score + wl_score + sw_score + punct_pen) / 4.0, 6)
-
-
 def lang_id(text: Column) -> Column:
     """Heuristic language ID: 'en' when the stopword ratio clears 2%,
     else 'unknown'. (Real n-gram models plug in the same shape: a
@@ -119,8 +106,10 @@ def bullet_line_ratio(text: Column) -> Column:
     # one multiline regex pass over the whole document instead of an
     # interpreted per-line filter lambda (each lambda invocation paid
     # its own rlike): a line "starts with a bullet after F.trim" iff
-    # (?m)^ *[-*•] matches — F.trim strips exactly the space char
-    bullets = F.regexp_count(text, F.lit(r"(?m)^ *[-*•]"))
+    # ^ *[-*•] matches — F.trim strips exactly the space char. UNIX_LINES
+    # (d) makes ^ follow \n only, the same line model as the split
+    # above; plain (?m) also starts lines after \r, U+0085 and U+2028/9
+    bullets = F.regexp_count(text, F.lit(r"(?md)^ *[-*•]"))
     return F.when(n > 0, bullets.cast("double") / n).otherwise(F.lit(0.0))
 
 

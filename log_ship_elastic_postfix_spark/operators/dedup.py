@@ -233,7 +233,13 @@ def minhash_band_buckets(text_col: Column, k: int = 32,
     64-bit accidental collision merges two buckets and can only ADD
     candidates, which exact verification then scores — the oracle's
     recall-1.0 gate is unaffected). NULL for un-shingle-able docs,
-    like :func:`minhash_signature`."""
+    like :func:`minhash_signature`.
+
+    ``bands`` must divide ``k`` (each band takes ``k // bands`` rows);
+    anything else raises ValueError at call time, before any task runs."""
+    if bands < 1 or k % bands:
+        raise ValueError(
+            f"minhash_band_buckets: bands={bands} must divide k={k}")
     rows = k // bands
     a = np.array([((2 * i + 1) * 2654435761) % _MERSENNE31 or 1
                   for i in range(k)], dtype=np.int64)

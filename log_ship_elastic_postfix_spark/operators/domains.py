@@ -1,4 +1,4 @@
-"""Per-domain corpus controls: stats and document caps.
+"""Per-domain corpus controls: document caps.
 
 Web pipelines bound how much any single registered domain contributes
 to the training mix (RefinedWeb / FineWeb keep at most N documents or
@@ -22,8 +22,7 @@ Scale design for the cap (the part a naive window gets wrong):
 * Over-cap rows rank in TWO phases: a salted local top-cap
   (window over (domain, salt) keeps ≤ cap rows per salt, bounding
   every sort task) then the global top-cap over the ≤ cap·n_salts
-  survivors per domain. Salted ≡ unsalted is pinned by test, the same
-  contract as :func:`.assemble.assemble_salted`.
+  survivors per domain. Salted ≡ unsalted is pinned by test.
 
 Ordering is total — (order column, id) — so the kept set is
 deterministic and an external SQL engine restates it verbatim.
@@ -36,18 +35,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.urls import url_registered_domain
-
-
-def domain_stats(df: DataFrame, *, url_col: str = "url",
-                 size_col: str | None = None) -> DataFrame:
-    """Per-registered-domain volume audit: document count (+ total
-    ``size_col`` when given). One partial-aggregated exchange keyed on
-    the domain string."""
-    dom = url_registered_domain(F.col(url_col)).alias("domain")
-    aggs = [F.count(F.lit(1)).alias("n_docs")]
-    if size_col is not None:
-        aggs.append(F.sum(F.col(size_col)).cast("long").alias("total_size"))
-    return df.select(dom).groupBy("domain").agg(*aggs)
 
 
 def domain_cap(

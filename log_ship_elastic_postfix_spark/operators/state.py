@@ -31,7 +31,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .assemble import DOC_FIELDS
+from .assemble import DOC_FIELDS, ORDER_COLS, assemble
 
 
 class StateStore:
@@ -324,14 +324,8 @@ class StateStore:
         return True
 
 
-def merge_with_state(
-    parsed: DataFrame,
-    state_docs: Optional[DataFrame],
-    order_cols: Optional[list[str]] = None,
-    *,
-    salt_hot_keys: bool = False,
-    n_salts: int = 8,
-) -> DataFrame:
+def merge_with_state(parsed: DataFrame,
+                     state_docs: Optional[DataFrame]) -> DataFrame:
     """Continuation fold: committed docs ⊔ new lines by qid.
 
     Equivalent to the reference's populatePfdocsFromEs → updatePfDocs
@@ -340,33 +334,16 @@ def merge_with_state(
     committed doc becomes one row carrying its JSON form with
     batch_seq/line_no = −1, unioned into the parsed-line stream, so the
     continuation costs exactly the same single exchange as the plain
-    fold (no per-key cogroup round-trips).
-
-    ``salt_hot_keys=True`` runs the skew-resistant two-phase fold
-    instead — the seed row rides the same union and is restored inside
-    the salted partial phase (bit-identical result; pinned by
-    tests/test_round3.py::test_salted_state_continuation_equals_plain),
-    so streaming/state batches keep hot-key protection too."""
-    from .assemble import assemble, assemble_salted
-
-    order_cols = order_cols or ["batch_seq", "line_no"]
-
-    def _fold(df: DataFrame) -> DataFrame:
-        if salt_hot_keys:
-            return assemble_salted(df, n_salts=n_salts,
-                                   order_cols=order_cols)
-        return assemble(df, order_cols=order_cols)
-
+    fold (no per-key cogroup round-trips)."""
     if state_docs is None:
-        return _fold(parsed)
+        return assemble(parsed)
 
     ptypes = dict(parsed.dtypes)
     doc_cols = [F.col(f"`{f.name}`") for f in DOC_FIELDS]
     seeds = state_docs.select(
         F.col("qid"),
         F.to_json(F.struct(*doc_cols)).alias("_seed_json"),
-        F.lit(-1).cast(ptypes.get("batch_seq", "bigint")).alias("batch_seq"),
-        F.lit(-1).cast(ptypes.get("line_no", "bigint")).alias("line_no"),
+        *[F.lit(-1).cast(ptypes.get(c, "bigint")).alias(c)
+          for c in ORDER_COLS],
     )
-    unioned = parsed.unionByName(seeds, allowMissingColumns=True)
-    return _fold(unioned)
+    return assemble(parsed.unionByName(seeds, allowMissingColumns=True))

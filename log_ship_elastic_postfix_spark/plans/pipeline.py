@@ -25,8 +25,8 @@ _log = logging.getLogger(__name__)
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import assemble as assemble_mod
 from ..operators import enrich, route
+from ..operators.assemble import ORDER_COLS
 from ..operators.parse import ParseResult, parse_lines
 from ..operators.state import StateStore, merge_with_state
 from ..sources.bookmark import BookmarkStore, partition_lineage
@@ -46,9 +46,6 @@ class PipelineConfig:
     n_batches: int = 1
     orphan_sink: str = route.ORPHAN_SINK
     parent_sink: str = route.PARENT_SINK
-    salt_hot_keys: bool = False
-    n_salts: int = 8
-    order_cols: tuple[str, ...] = ("batch_seq", "line_no")
     # S7 typed sink (index-map-template projection) on the terminal
     # write; False writes the all-string in-flight shape (the r1
     # behavior) — bench times both so the typed feature's cost is
@@ -69,7 +66,7 @@ class BatchResult:
 def parse_stage(lines: DataFrame, cfg: PipelineConfig) -> ParseResult:
     # only the order keys ride through the parse UDF — url/lang/text
     # passengers would be Arrow-serialized both ways for nothing
-    passengers = [c for c in cfg.order_cols if c in lines.columns]
+    passengers = [c for c in ORDER_COLS if c in lines.columns]
     return parse_lines(lines, tz=cfg.tz, now=cfg.now,
                        passengers=passengers)
 
@@ -81,19 +78,11 @@ def assemble_stage(parsed: DataFrame, cfg: PipelineConfig,
     # text/html passenger columns (at 100 TB the difference is the
     # whole shuffle volume)
     from ..operators.parse import PARSED_FIELDS
-    keep = [c for c in ("qid", "host", "prog", "date", *cfg.order_cols)
+    keep = [c for c in ("qid", "host", "prog", "date", *ORDER_COLS)
             if c in parsed.columns]
     keep += [f for f in PARSED_FIELDS if f in parsed.columns and f != "qid"]
     parsed = parsed.select(*[F.col(f"`{c}`") for c in keep])
-    order_cols = list(cfg.order_cols)
-    if state_docs is not None:
-        return merge_with_state(parsed, state_docs, order_cols=order_cols,
-                                salt_hot_keys=cfg.salt_hot_keys,
-                                n_salts=cfg.n_salts)
-    if cfg.salt_hot_keys:
-        return assemble_mod.assemble_salted(
-            parsed, n_salts=cfg.n_salts, order_cols=order_cols)
-    return assemble_mod.assemble(parsed, order_cols=order_cols)
+    return merge_with_state(parsed, state_docs)
 
 
 def run_batch(

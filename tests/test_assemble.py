@@ -1,7 +1,7 @@
 """Golden-doc sessionizer tests — 1:1 mirrors of the reference's
 merge-rule assertions (/root/reference/test/postfix-doc.js:50-261 and
 test/logship.js:44-68), run both through the pure-Python fold oracle
-and the distributed applyInPandas plan, plus salted ≡ unsalted."""
+and the distributed mapInPandas plan."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from log_ship_elastic_postfix_spark.operators.assemble import (
-    assemble, assemble_salted, fold_lines)
+    assemble, fold_lines)
 from log_ship_elastic_postfix_spark.operators.parse import parse_lines
 
 NOW = dt.datetime(2015, 8, 1)
@@ -21,11 +21,11 @@ def _lines_df(spark, lines):
         [(i + 1, l) for i, l in enumerate(lines)], "line_no long, line string")
 
 
-def _docs(spark, lines, salted=False):
+def _docs(spark, lines):
     parsed = parse_lines(_lines_df(spark, lines), now=NOW).parsed
     parsed = parsed.withColumn("batch_seq", F.lit(0))
-    df = assemble_salted(parsed) if salted else assemble(parsed)
-    return {r["qid"]: r.asDict(recursive=True) for r in df.collect()}
+    return {r["qid"]: r.asDict(recursive=True)
+            for r in assemble(parsed).collect()}
 
 
 THREE_LINES = [
@@ -171,29 +171,3 @@ def test_scache_and_cleanup_no_events():
     ])
     assert doc["message-id"] == "mid@x"
     assert doc["n_events"] == 0
-
-
-def test_salted_equals_unsalted(spark):
-    """The two-phase skew fold must be bit-identical to the plain fold,
-    including ordering-sensitive rules, on a hot key with duplicates."""
-    lines = list(THREE_LINES)
-    # plant a hot key: many smtp deliveries + an exact duplicate
-    hot = [
-        f"Jul 26 04:19:{s:02d} mx1 postfix/smtp[99]: 3hotKEYzzz: "
-        f"to=<u{s}@x.net>, relay=r[1]:25, delay=0.9, delays=0.4/0.1/0.2/0.2, "
-        f"dsn=2.0.0, status=sent (250 ok {s})"
-        for s in range(30)
-    ]
-    hot.insert(0, "Jul 26 04:18:00 mx1 postfix/qmgr[99]: 3hotKEYzzz: from=<h@x>, size=5, nrcpt=30 (queue active)")
-    hot.append(hot[5])  # exact duplicate line
-    hot.append("Jul 26 04:20:00 mx1 postfix/qmgr[99]: 3hotKEYzzz: removed")
-    all_lines = lines + hot
-
-    plain = _docs(spark, all_lines, salted=False)
-    salted = _docs(spark, all_lines, salted=True)
-    assert set(plain) == set(salted)
-    for qid in plain:
-        assert plain[qid] == salted[qid], qid
-    assert plain["3hotKEYzzz"]["n_events"] == 32  # 1 queued + 30 smtp (dup
-    # suppressed; dup's seconds repeat s=5 but line differs only none) ...
-    assert plain["3hotKEYzzz"]["isFinal"] is True

@@ -12,7 +12,6 @@ def test_defaults_when_no_ini(tmp_path):
     cfg = load_config(str(tmp_path))
     assert cfg.tz == "America/Phoenix"
     assert cfg.orphan_sink == "postfix-orphan"
-    assert cfg.salt_hot_keys is False
 
 
 def test_ini_search_path_first_readable_wins(tmp_path):
@@ -26,9 +25,6 @@ def test_ini_search_path_first_readable_wins(tmp_path):
         [elastic]
         index = web-orphan
         parent_index = web-parent
-        [shipper]
-        salt_hot_keys = true
-        n_salts = 4
         """))
     assert find_config(str(tmp_path)) == str(ini)
     cfg = load_config(str(tmp_path))
@@ -36,6 +32,4 @@ def test_ini_search_path_first_readable_wins(tmp_path):
     assert cfg.n_batches == 16
     assert cfg.orphan_sink == "web-orphan"
     assert cfg.parent_sink == "web-parent"
-    assert cfg.salt_hot_keys is True
-    assert cfg.n_salts == 4
     assert cfg.now.year == 2024

@@ -1,5 +1,5 @@
 """Property-based tests (hypothesis) for the fold's algebraic
-invariants — the guarantees the distributed/salted/replayed variants
+invariants — the guarantees the distributed/replayed variants
 rely on."""
 
 from __future__ import annotations

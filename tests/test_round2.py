@@ -1,6 +1,6 @@
 """Round-2 behaviors: no-op write suppression, job-level batch retry,
 typed sink schema, bookmark validation, LSH degenerate-input bounds,
-multi-batch salted ordering, and rspamd/rmilter event parity."""
+multi-batch fold ordering, and rspamd/rmilter event parity."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from log_ship_elastic_postfix_spark import datagen
 from log_ship_elastic_postfix_spark.operators import dedup
 from log_ship_elastic_postfix_spark.operators.assemble import (
-    assemble, assemble_salted, fold_lines)
+    _doc_to_row, assemble, fold_lines)
 from log_ship_elastic_postfix_spark.operators.parse import parse_lines
 from log_ship_elastic_postfix_spark.operators.state import StateStore
 from log_ship_elastic_postfix_spark.plans.pipeline import (
@@ -224,11 +224,11 @@ def test_lsh_bucket_cap_drops_and_logs(spark, caplog):
     assert any("over-cap" in r.message for r in caplog.records)
 
 
-# --------------------------------------------- multi-batch salted order
+# ---------------------------------------------- multi-batch fold order
 def test_salted_equals_unsalted_across_batches(spark):
     """line_no restarts per batch, so ordering is only defined by
-    (batch_seq, line_no); the salted fold must honor the composite key
-    (round-1 bug: line_no-only ordering picked the wrong hoist)."""
+    (batch_seq, line_no); the distributed fold must honor the composite
+    key (round-1 bug: line_no-only ordering picked the wrong hoist)."""
     qid = "3mXbatchQQ"
     b0 = [
         f"Jul 26 04:18:00 mx1 postfix/qmgr[9]: {qid}: from=<a@x>, size=1, nrcpt=1 (queue active)",
@@ -244,21 +244,20 @@ def test_salted_equals_unsalted_across_batches(spark):
         rows, "batch_seq long, line_no long, line string")
     parsed = parse_lines(lines, now=CFG.now).parsed
 
-    plain = {r["qid"]: r.asDict(recursive=True)
-             for r in assemble(parsed).collect()}
-    salted = {r["qid"]: r.asDict(recursive=True)
-              for r in assemble_salted(parsed, n_salts=4).collect()}
-    assert plain == salted
+    docs = {r["qid"]: r.asDict(recursive=True)
+            for r in assemble(parsed).collect()}
     # last hoist in GLOBAL order is batch 1's delay
-    assert plain[qid]["delay"] == "0.999"
-    assert plain[qid]["n_events"] == 4
+    assert docs[qid]["delay"] == "0.999"
+    assert docs[qid]["n_events"] == 4
+    assert docs[qid]["isFinal"] is True
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_salted_equals_unsalted_randomized(spark, seed):
-    """Randomized multi-batch, multi-qid equivalence sweep: interleaved
-    lifecycles, duplicate lines, expired/removed orders — salted must
-    stay bit-identical to the plain fold."""
+    """Randomized multi-batch, multi-qid sweep: interleaved lifecycles,
+    duplicate lines, expired/removed orders — the distributed fold must
+    equal the pure-Python fold_lines oracle run per qid over its lines
+    in (batch_seq, line_no) order."""
     import random
 
     rng = random.Random(seed)
@@ -288,11 +287,15 @@ def test_salted_equals_unsalted_randomized(spark, seed):
     df = spark.createDataFrame(
         lines, "batch_seq long, line_no long, line string")
     parsed = parse_lines(df, now=CFG.now).parsed
-    plain = {r["qid"]: r.asDict(recursive=True)
-             for r in assemble(parsed).collect()}
-    salted = {r["qid"]: r.asDict(recursive=True)
-              for r in assemble_salted(parsed, n_salts=5).collect()}
-    assert plain == salted
+    docs = {r["qid"]: r.asDict(recursive=True)
+            for r in assemble(parsed).collect()}
+    by_qid: dict[str, list[dict]] = {}
+    for r in sorted((r.asDict() for r in parsed.collect()),
+                    key=lambda r: (r["batch_seq"], r["line_no"])):
+        by_qid.setdefault(r["qid"], []).append(r)
+    oracle = {q: _doc_to_row(fold_lines(rows)) for q, rows in by_qid.items()}
+    assert set(docs) == set(oracle) == set(qids)
+    assert docs == oracle
 
 
 # ------------------------------------------------ rspamd/rmilter parity

@@ -1,7 +1,7 @@
 """Round-3 behaviors: ADVICE fixes (qid hex rule, arrow rest masking,
 IVF sparse-id centroids, scale-safe verify default, tz-independent
 typed-sink query) and judge items (per-partition noop, sink gate,
-star CC, streaming salt parity)."""
+star CC, hot-key streaming restart)."""
 
 from __future__ import annotations
 
@@ -215,47 +215,18 @@ def test_cc_star_matches_labelprop_on_random_graphs(spark):
         assert star == prop, f"trial {trial}"
 
 
-# ------------------- salted state continuation + streaming (judge #9)
+# ------------------- hot-key streaming checkpoint restart (judge #9)
 def _fold_state_docs(spark, store):
     return {r["qid"]: r.asDict(recursive=True)
             for r in store.read(spark).collect()}
 
 
-def test_salted_state_continuation_equals_plain(spark, tmp_path):
-    """merge_with_state with salt_hot_keys=True (seed rows restored
-    inside the salted partial phase) is bit-identical to the plain
-    seeded fold, across two state batches with planted hot keys."""
-    from log_ship_elastic_postfix_spark import datagen
-    from log_ship_elastic_postfix_spark.operators.state import StateStore
-    from log_ship_elastic_postfix_spark.plans.pipeline import (
-        PipelineConfig, run_pipeline)
-
-    pages = datagen.generate_pages(spark, 40, n_hot=3, hot_lines=48,
-                                   n_partitions=2)
-    stores = {}
-    for label, salt in (("plain", False), ("salted", True)):
-        store = StateStore(str(tmp_path / f"state_{label}"))
-        cfg = PipelineConfig(n_batches=3, salt_hot_keys=salt, n_salts=4)
-        run_pipeline(spark, pages, cfg, state=store)
-        stores[label] = _fold_state_docs(spark, store)
-    plain, salted = stores["plain"], stores["salted"]
-    assert set(plain) == set(salted)
-    for qid in plain:
-        p, s = plain[qid], salted[qid]
-        assert p["n_events"] == s["n_events"], qid
-        assert p["isFinal"] == s["isFinal"], qid
-        assert p["events"] == s["events"], qid
-        for k in ("host", "date", "from", "size", "nrcpt", "uid",
-                  "delay", "delays"):
-            assert p.get(k) == s.get(k), (qid, k)
-
-
 @pytest.mark.timeout(300)
-def test_stream_salted_checkpoint_restart(spark, tmp_path):
-    """Checkpoint-restart streaming with salt_hot_keys=True and planted
-    hot keys: wave 2 arrives after a down period, the restarted query
-    processes exactly the new files, and the salted state equals a
-    one-shot plain batch run over everything."""
+def test_stream_hot_key_checkpoint_restart(spark, tmp_path):
+    """Checkpoint-restart streaming with planted hot keys: wave 2
+    arrives after a down period, the restarted query processes exactly
+    the new files, and the streamed state equals a one-shot batch run
+    over everything."""
     from log_ship_elastic_postfix_spark import datagen
     from log_ship_elastic_postfix_spark.operators.state import StateStore
     from log_ship_elastic_postfix_spark.plans.pipeline import (
@@ -272,7 +243,7 @@ def test_stream_salted_checkpoint_restart(spark, tmp_path):
     wave2 = all_pages.subtract(wave1)
     wave1.write.mode("overwrite").parquet(pages_path)
 
-    cfg = PipelineConfig(salt_hot_keys=True, n_salts=4)
+    cfg = PipelineConfig()
     store = StateStore(str(tmp_path / "state"))
     bm = BookmarkStore(str(tmp_path / "bm"))
     ckpt = str(tmp_path / "ckpt")

@@ -49,6 +49,17 @@ def test_minhash_band_buckets_collide_iff_band_equal(spark):
     assert (b0 != b2).any(), "different docs must differ in some band"
 
 
+def test_minhash_band_buckets_rejects_bands_not_dividing_k(spark):
+    """k=30 does not split into 8 equal bands: the call itself raises a
+    ValueError naming both values, before any task runs (the kernel's
+    reshape(bands, k // bands) would crash per batch)."""
+    import pytest
+    from log_ship_elastic_postfix_spark.operators import dedup
+
+    with pytest.raises(ValueError, match=r"bands=8.*k=30"):
+        dedup.minhash_band_buckets(F.col("text"), 30, 3, 8)
+
+
 def test_gram_hashes_match_shingle_semantics(spark):
     """_gram_hashes64 emits one hash per DISTINCT word n-gram — the
     count must equal the JVM shingle expression's distinct-gram count
@@ -131,3 +142,48 @@ def test_null_vector_rows_score_zero_not_crash(spark):
         n_blocks=2).collect()
     got = {r["vec_id"]: r["dropped"] for r in sem}
     assert got[1] is True and got[2] is False
+
+
+def test_ivf_assign_all_null_partition(spark):
+    """A partition holding only NULL embeddings reaches the IVF assign
+    kernel as an all-NULL batch: the zero vectors it scores take the
+    centroid width, not a guessed width of 1 that fails the matmul."""
+    from log_ship_elastic_postfix_spark.operators import similarity
+
+    schema = "vec_id long, embedding array<double>"
+    good = spark.createDataFrame(
+        [(i, [1.0, 0.1 * i, 0.0, 0.0]) for i in range(6)]
+        + [(10 + i, [0.0, 0.0, 1.0, 0.1 * i]) for i in range(6)],
+        schema).coalesce(1)
+    nulls = spark.createDataFrame(
+        [(100 + i, None) for i in range(4)], schema).coalesce(1)
+    df = good.union(nulls)
+    out = similarity.ivf_topk(
+        df, k=3, n_probe=2,
+        centroids=[[1.0, 0.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0]]).collect()
+    by_q: dict[int, list] = {}
+    for r in out:
+        by_q.setdefault(r["query_id"], []).append(r)
+    assert set(by_q) == set(range(6)) | set(range(10, 16)) | set(
+        range(100, 104))
+    for q in range(6):  # a real vector's top-3 stays in its own cluster
+        assert {r["nbr_id"] for r in by_q[q]} <= set(range(6))
+    for q in range(100, 104):  # a NULL query scores 0 against everything
+        assert all(r["score"] == 0.0 for r in by_q[q])
+
+
+def test_bullet_line_ratio_counts_newline_lines_only(spark):
+    """The bullet count and the line count share one line model: only
+    \n starts a line. \r, U+0085 and U+2028/9 do not, so a bullet
+    marker after them is inside the line, as is a marker after text."""
+    from log_ship_elastic_postfix_spark.functions import textstats
+
+    df = spark.createDataFrame(
+        [(0, "intro\r- x\u0085- x\u2028- x\u2029- x - x"),
+         (1, "- a\nplain\n  * b\n\u2022 c")],
+        "id long, text string")
+    got = {r["id"]: r["r"] for r in df.select(
+        "id", textstats.bullet_line_ratio(F.col("text")).alias("r"))
+        .collect()}
+    assert got[0] == 0.0
+    assert got[1] == 0.75
