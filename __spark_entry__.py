@@ -436,18 +436,31 @@ def q_ann_topk_dot(spark, sf_dir):
 
     q_rows = (e.filter(F.col("vec_id") < 50).orderBy("vec_id")
               .select("vec_id", "q").collect())
-    q_mat = _np.array([r["q"] for r in q_rows], dtype=_np.int64)  # (Q, d)
     q_ids = F.array(*[F.lit(int(r["vec_id"])) for r in q_rows])
+    q_vecs = [r["q"] for r in q_rows]
+    dim = next((len(v) for v in q_vecs if v is not None), 1)
+    q_mat = _np.array(similarity._null_safe(q_vecs, dim),
+                      dtype=_np.int64)                    # (Q, d)
+    q_null = _np.array([v is None for v in q_vecs])
 
     # hintless on purpose: under `from __future__ import annotations`
     # the hints are strings and pyspark's signature inference rejects
-    # them (the repetition_stats precedent)
+    # them (the repetition_stats precedent). A NULL vector on either
+    # side gives a NULL dot (DuckDB's list_dot_product), which both
+    # engines' `desc` ordering ranks last.
     @_pudf("array<long>")
     def _dots_vs_queries(nv):
         if len(nv) == 0:
             return _pd.Series([], dtype=object)
-        m = _np.array(nv.tolist(), dtype=_np.int64)       # (n, d)
-        return _pd.Series((m @ q_mat.T).tolist())         # (n, Q)
+        m = _np.array(similarity._null_safe(nv.tolist(), dim),
+                      dtype=_np.int64)                    # (n, d)
+        dots = m @ q_mat.T                                # (n, Q)
+        null = nv.isna().to_numpy()
+        if null.any() or q_null.any():
+            dots = dots.astype(object)
+            dots[null, :] = None
+            dots[:, q_null] = None
+        return _pd.Series(dots.tolist())
 
     scored = (corpus
               .select("nbr_id", F.posexplode(
@@ -484,10 +497,9 @@ def q_simhash_neardup(spark, sf_dir):
     comparable). EXPLICIT corpus cap at doc_id<1000 (covers the whole
     sf0.01 correctness corpus): recall 1.0 for jaccard-0.5 pairs needs
     8-bit slices whose random-collision candidate count grows n²/256 —
-    a verification-primitive demo, like token_jaccard_pairs. The
-    unbounded-scale simhash path is the hamming≤n_tables−1 variant
-    (pigeonhole guarantee, wide slices), pytest-covered in
-    tests/test_dedup_similarity.py."""
+    a verification-primitive demo, like token_jaccard_pairs. Recall is
+    guaranteed only for pairs within hamming ≤ n_tables−1 (pigeonhole);
+    the bucket cap bounds the slices' collision buckets at scale."""
     # parallelize=False: the query keeps only 1000 docs — the blanket
     # repartition would shuffle the whole table just to discard it;
     # the pushed-down doc_id filter on the raw scan is cheaper, and

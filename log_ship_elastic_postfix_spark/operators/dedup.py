@@ -19,10 +19,12 @@ standard corpus-dedup toolbox; each operator here is expressible at
 Degenerate-input rule (the 100 TB killer): documents too short to
 shingle produce a NULL signature and are **excluded from banding** —
 otherwise every empty doc on the planet shares one signature and one
-mega-bucket per band. Buckets above ``max_bucket_size`` are dropped
-with a logged count (no silent caps): at web scale a bucket with 10⁹
-members is boilerplate collision, not near-duplication, and pairing it
-is O(bucket²).
+mega-bucket per band. :func:`bucket_join_pairs` is the one bucket
+self-join (MinHash, SimHash and cosine LSH all feed it band keys).
+Buckets above ``MAX_BUCKET`` members are dropped with a logged count
+(no silent caps): at web scale a bucket with 10⁹ members is
+boilerplate collision, not near-duplication, and pairing it is
+O(bucket²).
 
 Physical note: the signature computations (MinHash, SimHash) are
 Arrow-vectorized pandas UDFs. Shingle hashes are composed from cached
@@ -65,10 +67,10 @@ def _is_missing_path(exc: Exception) -> bool:
     cls = get_cls() or ""
     return "PATH_NOT_FOUND" in cls or "Path does not exist" in str(exc)
 
-# default bucket-size cap: pairs-per-bucket stays ≤ ~500k (bounded
-# task time); real near-dup clusters this large are resolved by the
+# bucket-size cap: pairs-per-bucket stays ≤ ~500k (bounded task
+# time); real near-dup clusters this large are resolved by the
 # exact-dedup pass first, so dropping is safe — and always logged.
-DEFAULT_MAX_BUCKET = 1024
+MAX_BUCKET = 1024
 
 
 def normalize_text(text: Column) -> Column:
@@ -312,48 +314,48 @@ def simhash64(text_col: Column, n_shingle: int = 2) -> Column:
 
 
 # ----------------------------------------------------------------- LSH
-def bucket_join_pairs(
-    exploded: DataFrame,
-    key_cols: list[str],
-    id_col: str = "doc_id",
-    *,
-    max_bucket_size: int = DEFAULT_MAX_BUCKET,
-    label: str = "lsh",
-) -> DataFrame:
-    """(id, bucket-key…) rows → distinct candidate pairs (id_a < id_b)
-    via a within-bucket self-join.
+def bucket_join_pairs(df: DataFrame, keys: Column, id_col: str = "doc_id",
+                      *, label: str = "lsh") -> DataFrame:
+    """Per-row band keys → distinct candidate pairs (id_a < id_b) via a
+    within-bucket self-join. The one bucket join of the near-duplicate
+    family: MinHash bands, SimHash slices and cosine sign tables all
+    arrive here as ``keys``, an ``array<long>`` with one bucket per
+    band. A NULL array means "never bucketed" (an un-shingle-able doc,
+    a NULL or zero vector) and ``posexplode`` emits no row for it.
 
-    Scale shape: one persist of the (id, keys) frame (ints only — the
-    signature UDF runs exactly once), one count-per-bucket aggregation,
-    and a self-join keyed on the bucket — a hot bucket distributes over
-    its join tasks instead of materializing as a single ``collect_set``
-    row. Buckets larger than ``max_bucket_size`` are dropped and the
-    drop is **logged** (no silent caps); at production scale the same
-    frame would land in a temp table instead of a persist.
+    Scale shape: one persist of the (id, band, bucket) frame (ints
+    only — the key kernel runs exactly once), one count-per-bucket
+    aggregation, and a self-join keyed on the bucket — a hot bucket
+    distributes over its join tasks instead of materializing as a
+    single ``collect_set`` row. Buckets larger than ``MAX_BUCKET`` are
+    dropped and the drop is **logged** (no silent caps); at production
+    scale the same frame would land in a temp table instead of a
+    persist.
 
     The returned pairs frame is eagerly ``localCheckpoint``-ed so the
     persist can be released before returning (bounded executor
     memory; pairs are two longs per row).
     """
-    exploded = exploded.persist()
+    key_cols = ["band", "bucket"]
+    exploded = df.select(F.col(id_col), F.posexplode(keys)
+                         .alias(*key_cols)).persist()
+    # sizes persisted too: the drop-count action AND the eligible join
+    # both read it — without the persist the groupBy runs twice over
+    # the exploded frame
+    sizes = (exploded.groupBy(*key_cols)
+             .agg(F.count(F.lit(1)).alias("_bsz"))).persist()
     try:
-        # sizes persisted too: the drop-count action AND the eligible
-        # join both read it — without the persist the groupBy runs
-        # twice over the exploded frame
-        sizes = (exploded.groupBy(*key_cols)
-                 .agg(F.count(F.lit(1)).alias("_bsz"))).persist()
-        dropped = sizes.filter(F.col("_bsz") > max_bucket_size)
+        dropped = sizes.filter(F.col("_bsz") > MAX_BUCKET)
         n_dropped = dropped.count()
         if n_dropped:
             top = dropped.orderBy(F.col("_bsz").desc()).limit(3).collect()
             log.warning(
                 "%s: dropped %d over-cap buckets (cap=%d, largest=%s) — "
                 "pairs inside them are NOT examined",
-                label, n_dropped, max_bucket_size,
-                [r["_bsz"] for r in top])
+                label, n_dropped, MAX_BUCKET, [r["_bsz"] for r in top])
         eligible = exploded.join(
             sizes.filter((F.col("_bsz") > 1)
-                         & (F.col("_bsz") <= max_bucket_size))
+                         & (F.col("_bsz") <= MAX_BUCKET))
             .select(*key_cols),
             key_cols)
         a = eligible.select(*key_cols, F.col(id_col).alias("id_a"))
@@ -365,16 +367,12 @@ def bucket_join_pairs(
         return pairs.localCheckpoint(eager=True)
     finally:
         exploded.unpersist()
-        try:
-            sizes.unpersist()
-        except NameError:
-            pass
+        sizes.unpersist()
 
 
 def minhash_lsh_candidates(
     df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id",
     n_shingle: int = 3, k: int = 32, bands: int = 8,
-    max_bucket_size: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """LSH candidate pairs: equal band-slice → same bucket → pair.
 
@@ -382,14 +380,9 @@ def minhash_lsh_candidates(
     (band, band_hash); NULL signatures (un-shingle-able docs) never
     enter banding, so there is no universal empty-doc bucket.
     """
-    sigb = minhash_band_buckets(F.col(text_col), k, n_shingle, bands)
-    exploded = (df.select(F.col(id_col), sigb.alias("bb"))
-                .filter(F.col("bb").isNotNull())
-                .select(id_col, F.posexplode(F.col("bb"))
-                        .alias("band", "bucket")))
-    return bucket_join_pairs(exploded, ["band", "bucket"], id_col,
-                             max_bucket_size=max_bucket_size,
-                             label="minhash-lsh")
+    return bucket_join_pairs(
+        df, minhash_band_buckets(F.col(text_col), k, n_shingle, bands),
+        id_col, label="minhash-lsh")
 
 
 def _shingle_strings(text_col: Column, n: int) -> Column:
@@ -483,7 +476,6 @@ def jaccard_pairs(
 def near_duplicates_minhash(
     df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id",
     n_shingle: int = 3, k: int = 32, bands: int = 8, threshold: float = 0.7,
-    max_bucket_size: int = DEFAULT_MAX_BUCKET,
     broadcast_shingles: bool = False,
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates → exact Jaccard verify.
@@ -495,7 +487,7 @@ def near_duplicates_minhash(
     all-pairs oracle on the deterministic corpus."""
     cand = minhash_lsh_candidates(
         df, text_col=text_col, id_col=id_col, n_shingle=n_shingle,
-        k=k, bands=bands, max_bucket_size=max_bucket_size)
+        k=k, bands=bands)
     return jaccard_pairs(df, cand, text_col=text_col, id_col=id_col,
                          n_shingle=n_shingle, threshold=threshold,
                          broadcast_shingles=broadcast_shingles)
@@ -504,7 +496,6 @@ def near_duplicates_minhash(
 def simhash_candidates(
     df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id",
     n_shingle: int = 2, n_tables: int = 8,
-    max_bucket_size: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """SimHash candidate pairs: bucket on 64/n_tables-bit key slices.
 
@@ -513,55 +504,15 @@ def simhash_candidates(
     excluded — no universal zero bucket."""
     slice_bits = 64 // n_tables
     mask = (1 << slice_bits) - 1
-    sh = (df.select(F.col(id_col),
-                    simhash64(F.col(text_col), n_shingle).alias("simhash"))
-          .filter(F.col("simhash").isNotNull()))
-    # one explode, not a union of n_tables branches — a union re-runs
-    # the signature UDF once per branch; this is a single pass
-    slices = F.array(*[
-        F.struct(F.lit(t).alias("tbl"),
-                 F.shiftrightunsigned(F.col("simhash"), t * slice_bits)
-                 .bitwiseAND(F.lit(mask)).alias("bkey"))
-        for t in range(n_tables)])
-    exploded = (sh.select(id_col, F.explode(slices).alias("s"))
-                .select(id_col, F.col("s.tbl").alias("tbl"),
-                        F.col("s.bkey").alias("bkey")))
-    return bucket_join_pairs(exploded, ["tbl", "bkey"], id_col,
-                             max_bucket_size=max_bucket_size,
-                             label="simhash-lsh")
-
-
-def simhash_near_duplicates(
-    df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id",
-    max_hamming: int = 3, n_shingle: int = 2, n_tables: int = 8,
-    max_bucket_size: int = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """SimHash near-dup pairs verified by exact hamming distance.
-
-    Pairs with hamming ≤ n_tables−1 are found with recall 1.0
-    (pigeonhole); beyond that, recall decays with distance."""
-    cand = simhash_candidates(
-        df, text_col=text_col, id_col=id_col, n_shingle=n_shingle,
-        n_tables=n_tables, max_bucket_size=max_bucket_size)
-    # persisted: both join sides below otherwise recompute the simhash
-    # UDF (the verify stage's whole cost, twice); released via an eager
-    # checkpoint of the verified pairs — same no-leak contract as
-    # jaccard_pairs (hamming pairs are three longs per row)
+    # the fingerprint is projected once; every slice reads the column,
+    # so the signature UDF runs a single pass
     sh = df.select(F.col(id_col),
-                   simhash64(F.col(text_col), n_shingle).alias("simhash")) \
-        .persist()
-    try:
-        a = sh.select(F.col(id_col).alias("id_a"),
-                      F.col("simhash").alias("sh_a"))
-        b = sh.select(F.col(id_col).alias("id_b"),
-                      F.col("simhash").alias("sh_b"))
-        ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-        verified = (cand.join(a, "id_a").join(b, "id_b")
-                    .select("id_a", "id_b", ham.alias("hamming"))
-                    .filter(F.col("hamming") <= max_hamming))
-        return verified.localCheckpoint(eager=True)
-    finally:
-        sh.unpersist()
+                   simhash64(F.col(text_col), n_shingle).alias("_h"))
+    h = F.col("_h")
+    slices = [F.shiftrightunsigned(h, t * slice_bits).bitwiseAND(F.lit(mask))
+              for t in range(n_tables)]
+    return bucket_join_pairs(sh, F.when(h.isNotNull(), F.array(*slices)),
+                             id_col, label="simhash-lsh")
 
 
 def _bidir(edges: DataFrame) -> DataFrame:
@@ -647,48 +598,10 @@ def connected_components(
         f"connected_components did not converge in {max_iter} iterations")
 
 
-def connected_components_labelprop(
-    pairs: DataFrame, *, id_a: str = "id_a", id_b: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Reference implementation: plain min-label propagation
-    (O(component-diameter) rounds — kept for differential testing of
-    the star algorithm; production uses :func:`connected_components`)."""
-    edges = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-             .unionByName(
-                 pairs.select(F.col(id_b).alias("src"),
-                              F.col(id_a).alias("dst")))
-             .distinct()
-             .localCheckpoint(eager=True))
-    labels = (edges.select(F.col("src").alias("id")).distinct()
-              .withColumn("label", F.col("id"))
-              .localCheckpoint(eager=True))
-    for _ in range(max_iter):
-        nbr_min = (edges.join(labels, edges["dst"] == labels["id"])
-                   .groupBy("src").agg(F.min("label").alias("nbr_label")))
-        new_labels = (labels.join(nbr_min, labels["id"] == nbr_min["src"],
-                                  "left")
-                      .select(F.col("id"),
-                              F.least(F.col("label"),
-                                      F.coalesce(F.col("nbr_label"),
-                                                 F.col("label")))
-                              .alias("label"))
-                      .localCheckpoint(eager=True))
-        n_changed = (new_labels.alias("n")
-                     .join(labels.alias("o"), "id")
-                     .filter(F.col("n.label") != F.col("o.label")).count())
-        labels = new_labels
-        if n_changed == 0:
-            return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} iterations")
-
-
 def simhash_verified_near_duplicates(
     df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id",
     n_shingle_sim: int = 2, n_shingle_jac: int = 3, n_tables: int = 8,
     threshold: float = 0.5,
-    max_bucket_size: int = DEFAULT_MAX_BUCKET,
     broadcast_shingles: bool = False,
     restrict_to_candidates: bool = True,
 ) -> DataFrame:
@@ -703,7 +616,7 @@ def simhash_verified_near_duplicates(
     machinery is pure overhead; at scale leave it on."""
     cand = simhash_candidates(
         df, text_col=text_col, id_col=id_col, n_shingle=n_shingle_sim,
-        n_tables=n_tables, max_bucket_size=max_bucket_size)
+        n_tables=n_tables)
     return jaccard_pairs(df, cand, text_col=text_col, id_col=id_col,
                          n_shingle=n_shingle_jac, threshold=threshold,
                          broadcast_shingles=broadcast_shingles,

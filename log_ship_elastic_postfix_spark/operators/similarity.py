@@ -9,6 +9,9 @@ Two paths, as a training-data pipeline needs both:
   vector lands in ``n_tables`` sign-buckets; candidate pairs only join
   within buckets, so the exchange is on bucket keys, never O(n²).
   Hyperplanes are deterministic (seeded arithmetic), not RNG state.
+  NULL and zero vectors have no direction and are never bucketed.
+  Near-dup pairs share the capped :func:`.dedup.bucket_join_pairs`
+  with MinHash and SimHash.
 
 Shuffle discipline (the 100 TB rule): candidate generation and
 dedup run over **ids only** — the (tbl, bucket) join and the
@@ -27,6 +30,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+from .dedup import bucket_join_pairs
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -159,17 +164,18 @@ def _hyperplane(dim: int, table: int, bit: int) -> list[float]:
     return [v / n for v in vals]
 
 
-def lsh_sign_buckets(
-    df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding",
-    dim: int = 64, n_tables: int = 4, n_bits: int = 8,
-) -> DataFrame:
-    """vector → (id, table, bucket) sign-signature keys — **ids only**
-    on the output so downstream bucket joins never shuffle vectors.
+def _sign_keys(vec: Column, *, dim: int, n_tables: int,
+               n_bits: int) -> Column:
+    """vector → ``array<long>`` of ``n_tables`` sign-signature bucket
+    keys (one ``n_bits``-bit key per table), the cosine member of the
+    band-key family :func:`.dedup.bucket_join_pairs` joins on.
 
     One Arrow pandas UDF computing the full (batch × tables·bits) sign
     matrix as a single numpy matmul — the pure-expression form costs
     n_tables·n_bits interpreted array-aggregate passes per row.
-    """
+    NULL and all-zero vectors have no direction and get NULL keys:
+    every sign of ``0 @ planes`` is ``>= 0``, so they would all share
+    one bucket per table, whose pairs grow quadratically and score 0."""
     planes = np.array([
         _hyperplane(dim, t, b) for t in range(n_tables)
         for b in range(n_bits)], dtype=np.float64).T  # (dim, T*B)
@@ -185,28 +191,44 @@ def lsh_sign_buckets(
         signs = (mat @ planes >= 0).astype(np.int64)     # (n, T*B)
         signs = signs.reshape(len(mat), n_tables, n_bits)
         vals = (signs * weights[None, None, :]).sum(axis=2)  # (n, T)
-        return pd.Series(vals.tolist())
+        return pd.Series([v if live else None for v, live
+                          in zip(vals.tolist(), mat.any(axis=1))],
+                         dtype=object)
 
     # asNondeterministic: stop generator/filter pushdown from
     # duplicating the sign kernel (guide §4.4)
-    return (df.select(F.col(id_col),
-                      F.posexplode(
-                          buckets.asNondeterministic()(F.col(vec_col)))
-                      .alias("tbl", "bucket"))
-            .select(id_col, "tbl", "bucket"))
+    return buckets.asNondeterministic()(vec)
 
 
-def _candidate_id_pairs(
-    df: DataFrame, *, id_col: str, vec_col: str, dim: int,
-    n_tables: int, n_bits: int, symmetric: bool,
+def lsh_sign_buckets(
+    df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding",
+    dim: int = 64, n_tables: int = 4, n_bits: int = 8,
+) -> DataFrame:
+    """vector → (id, table, bucket) sign-signature keys — **ids only**
+    on the output so downstream bucket joins never shuffle vectors.
+    NULL and all-zero vectors emit no rows (see :func:`_sign_keys`)."""
+    keys = _sign_keys(F.col(vec_col), dim=dim, n_tables=n_tables,
+                      n_bits=n_bits)
+    return df.select(F.col(id_col),
+                     F.posexplode(keys).alias("tbl", "bucket"))
+
+
+def ann_topk(
+    df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding",
+    dim: int = 64, k: int = 5, n_tables: int = 8, n_bits: int = 8,
     queries: DataFrame | None = None,
 ) -> DataFrame:
-    """Distinct candidate id pairs sharing ≥1 sign-bucket.
+    """Approximate top-k: candidates share ≥1 sign-bucket; exact cosine
+    + window rank within the candidate set. Recall rises with
+    ``n_tables``; the join key is (tbl, bucket) so the shuffle volume
+    is corpus × n_tables ids, not corpus² vectors. A NULL or zero
+    query vector has no direction and gets no neighbors.
 
-    ``symmetric=True`` emits (id_a < id_b) undirected pairs (near-dup
-    shape); otherwise directed (query_id, nbr_id) pairs with the left
-    side restricted to ``queries`` when given (ANN shape). The distinct
-    exchange carries ids only."""
+    The candidate join is directed, restricted to ``queries`` and not
+    capped like :func:`.dedup.bucket_join_pairs`: a 32 tables × 1 bit
+    config puts half the corpus in each bucket."""
+    from pyspark.sql.window import Window
+
     b = lsh_sign_buckets(df, id_col=id_col, vec_col=vec_col, dim=dim,
                          n_tables=n_tables, n_bits=n_bits)
     # the bucket frame feeds both join sides — persist it so the sign
@@ -218,31 +240,13 @@ def _candidate_id_pairs(
             qids = queries.select(F.col(id_col).alias("id_a")).distinct()
             left = left.join(F.broadcast(qids), "id_a")
         right = b.select(F.col(id_col).alias("id_b"), "tbl", "bucket")
-        cond = (F.col("id_a") < F.col("id_b") if symmetric
-                else F.col("id_a") != F.col("id_b"))
-        return (left.join(right, ["tbl", "bucket"])
-                .filter(cond)
-                .select("id_a", "id_b")
-                .distinct()
-                .localCheckpoint(eager=True))
+        pairs = (left.join(right, ["tbl", "bucket"])
+                 .filter(F.col("id_a") != F.col("id_b"))
+                 .select("id_a", "id_b")
+                 .distinct()
+                 .localCheckpoint(eager=True))
     finally:
         b.unpersist()
-
-
-def ann_topk(
-    df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding",
-    dim: int = 64, k: int = 5, n_tables: int = 8, n_bits: int = 8,
-    queries: DataFrame | None = None,
-) -> DataFrame:
-    """Approximate top-k: candidates share ≥1 sign-bucket; exact cosine
-    + window rank within the candidate set. Recall rises with
-    ``n_tables``; the join key is (tbl, bucket) so the shuffle volume
-    is corpus × n_tables ids, not corpus² vectors."""
-    from pyspark.sql.window import Window
-
-    pairs = _candidate_id_pairs(
-        df, id_col=id_col, vec_col=vec_col, dim=dim,
-        n_tables=n_tables, n_bits=n_bits, symmetric=False, queries=queries)
     qv = df.select(F.col(id_col).alias("id_a"),
                    F.col(vec_col).alias("query_vec"))
     nv = df.select(F.col(id_col).alias("id_b"),
@@ -358,16 +362,19 @@ def embedding_near_duplicates(
     broadcast_vectors: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (id_a < id_b) above threshold,
-    via the LSH candidate path; vectors join in after the id dedup.
+    via the capped bucket join :func:`.dedup.bucket_join_pairs` over
+    sign keys; vectors join in after the id dedup. NULL and zero
+    vectors are never bucketed, so they pair with nothing.
 
     ``broadcast_vectors=True`` is the small-corpus fast path (the
     ``jaccard_pairs``/``broadcast_shingles`` contract): both vector
     joins build as broadcasts, so candidate pairs never shuffle. The
     default stays the scale-safe shuffle join — at 100 TB the vector
     table cannot be a broadcast build side."""
-    pairs = _candidate_id_pairs(
-        df, id_col=id_col, vec_col=vec_col, dim=dim,
-        n_tables=n_tables, n_bits=n_bits, symmetric=True)
+    pairs = bucket_join_pairs(
+        df, _sign_keys(F.col(vec_col), dim=dim, n_tables=n_tables,
+                       n_bits=n_bits),
+        id_col, label="cosine-lsh")
     va = df.select(F.col(id_col).alias("id_a"),
                    F.col(vec_col).alias("vec_a"))
     vb = df.select(F.col(id_col).alias("id_b"),

@@ -71,10 +71,10 @@ def test_minhash_lsh_finds_planted_dups(spark, docs):
     assert (0, 1) in found and (0, 2) in found and (1, 2) in found
 
 
-def test_simhash_near_duplicates(spark, docs):
-    out = dedup.simhash_near_duplicates(docs, max_hamming=10)
+def test_simhash_verified_near_duplicates(spark, docs):
+    out = dedup.simhash_verified_near_duplicates(docs)
     found = {(r["id_a"], r["id_b"]) for r in out.collect()}
-    assert (0, 1) in found         # identical → hamming 0
+    assert (0, 1) in found         # identical → jaccard 1.0
     assert (1, 2) in found         # normalized-identical
 
 
@@ -150,6 +150,52 @@ def test_embedding_near_duplicates(spark, vecs):
         vecs, dim=4, threshold=0.99, n_tables=8, n_bits=2)
     found = {(r["id_a"], r["id_b"]) for r in out.collect()}
     assert (0, 1) in found
+
+
+def test_lsh_sign_buckets_skip_null_and_zero_vectors(spark):
+    """NULL and all-zero vectors have no direction: no sign-bucket
+    rows (every sign of 0 @ planes is >= 0, so they would all share
+    one bucket per table)."""
+    df = spark.createDataFrame(
+        [(0, None), (1, [0.0] * 4), (2, [1.0, 0.5, 0.0, -0.2])],
+        "vec_id long, embedding array<double>")
+    out = similarity.lsh_sign_buckets(df, dim=4, n_tables=3, n_bits=2)
+    assert sorted(r["vec_id"] for r in out.collect()) == [2, 2, 2]
+
+
+@pytest.mark.timeout(120)
+def test_embedding_near_duplicates_null_zero_flood(spark, monkeypatch):
+    """10k NULL or all-zero embeddings plus one planted pair: the
+    candidate pairs stay bounded and exactly the planted pair comes
+    back. Bucketing the degenerate rows would make ~5·10⁷ candidate
+    pairs per table, which all score 0."""
+    import pyspark.sql.classic.dataframe as classic
+
+    flood = spark.range(0, 10_000, 1, 4).select(
+        F.col("id").alias("vec_id"),
+        F.when(F.col("id") % 2 == 0, F.lit(None))
+        .otherwise(F.array(*[F.lit(0.0)] * 8))
+        .cast("array<double>").alias("embedding"))
+    pair = spark.createDataFrame(
+        [(20_000, [0.3, -0.1, 0.8, 0.2, -0.5, 0.1, 0.0, 0.4]),
+         (20_001, [0.3, -0.1, 0.8, 0.2, -0.5, 0.1, 0.0, 0.41])],
+        "vec_id long, embedding array<double>")
+    # the candidate join hands its pairs over as an eager checkpoint:
+    # count what it materializes
+    sizes = []
+    orig = classic.DataFrame.localCheckpoint
+
+    def counted(self, *a, **k):
+        out = orig(self, *a, **k)
+        sizes.append(out.count())
+        return out
+
+    monkeypatch.setattr(classic.DataFrame, "localCheckpoint", counted)
+    out = similarity.embedding_near_duplicates(
+        flood.unionByName(pair), dim=8, threshold=0.95)
+    assert [(r["id_a"], r["id_b"]) for r in out.collect()] == \
+        [(20_000, 20_001)]
+    assert sizes == [1]
 
 
 def test_textstats_basics(spark):

@@ -75,3 +75,30 @@ def test_rows_only_queries_run(spark):
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
+
+
+def test_ann_topk_dot_null_vectors_match_oracle(spark, tmp_path):
+    """A NULL embedding on either side gives a NULL dot, as DuckDB's
+    list_dot_product does, ranked last by both engines — instead of
+    failing the batch kernel. One query vector (vec_id < 50) and one
+    corpus vector are NULLed in a copy of the embeddings table."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    ids = t.column("vec_id").to_pylist()
+    emb = [None if i in (7, 300) else v
+           for i, v in zip(ids, t.column("embedding").to_pylist())]
+    t = t.set_column(t.schema.get_field_index("embedding"),
+                     t.schema.field("embedding"),
+                     pa.array(emb, type=t.schema.field("embedding").type))
+    pq.write_table(t, tmp_path / "embeddings.parquet")
+
+    spark_pdf = entry_mod.queries()["ann_topk_dot"](
+        spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute("create view embeddings as select * from "
+                f"'{tmp_path}/embeddings.parquet'")
+    ddb_pdf = con.sql(entry_mod.oracle_sql()["ann_topk_dot"]).df()
+    assert spark_pdf["dot"].isna().sum() == 5  # query 7's whole top-5
+    _assert_equal(spark_pdf, ddb_pdf, "ann_topk_dot")

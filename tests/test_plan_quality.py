@@ -175,8 +175,6 @@ def test_simhash_neardup_plan_no_cartesian(spark, docs_df, no_checkpoint):
     from log_ship_elastic_postfix_spark.operators import dedup
     out = dedup.simhash_verified_near_duplicates(docs_df, threshold=0.5)
     _assert_lsh_plan_shape(_plan(out))
-    out2 = dedup.simhash_near_duplicates(docs_df, max_hamming=3)
-    _assert_lsh_plan_shape(_plan(out2))
 
 
 def test_ann_cosine_lsh_plan_no_cartesian(spark, vecs_df, no_checkpoint):

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from log_ship_elastic_postfix_spark import datagen
-from log_ship_elastic_postfix_spark.operators import dedup
+from log_ship_elastic_postfix_spark.operators import dedup, similarity
 from log_ship_elastic_postfix_spark.operators.assemble import (
     _doc_to_row, assemble, fold_lines)
 from log_ship_elastic_postfix_spark.operators.parse import parse_lines
@@ -204,28 +204,38 @@ def test_lsh_empty_docs_never_bucket(spark):
 
 
 def test_lsh_bucket_cap_drops_and_logs(spark, caplog):
-    """An over-cap bucket (here: 300 identical docs vs cap 50) is
-    dropped with a logged count — no silent caps, no O(bucket²) blowup;
-    distinct near-dups below the cap are still found."""
+    """An over-cap bucket (here: MAX_BUCKET + 76 identical docs, then
+    as many identical vectors) is dropped with a logged count — no
+    silent caps, no O(bucket²) blowup; distinct near-dups below the
+    cap are still found, on the MinHash and the cosine path alike."""
     import logging
 
+    n = dedup.MAX_BUCKET + 76
     rows = [(i, "the quick brown fox jumps over the lazy dog wow")
-            for i in range(300)]
-    rows += [(1000, "completely different text about spark catalyst tungsten engine"),
-             (1001, "completely different text about spark catalyst tungsten engines")]
+            for i in range(n)]
+    rows += [(5000, "completely different text about spark catalyst tungsten engine"),
+             (5001, "completely different text about spark catalyst tungsten engines")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    with caplog.at_level(logging.WARNING,
-                         logger="log_ship_elastic_postfix_spark.operators.dedup"):
-        pairs = dedup.near_duplicates_minhash(
-            df, threshold=0.5, max_bucket_size=50)
-        found = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    assert (1000, 1001) in found
-    assert not any(a < 300 and b < 300 for a, b in found)  # capped away
-    assert any("over-cap" in r.message for r in caplog.records)
+    vrows = [(i, [1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]) for i in range(n)]
+    vrows += [(5000, [0.0, 1.0, 0.3, -0.2, 0.5, 0.1, -0.4, 0.2]),
+              (5001, [0.0, 1.0, 0.3, -0.2, 0.5, 0.1, -0.4, 0.21])]
+    vecs = spark.createDataFrame(vrows, "vec_id long, embedding array<double>")
+    logger = "log_ship_elastic_postfix_spark.operators.dedup"
+    for path, run in (
+            ("minhash", lambda: dedup.near_duplicates_minhash(
+                df, threshold=0.5)),
+            ("cosine", lambda: similarity.embedding_near_duplicates(
+                vecs, dim=8, threshold=0.95))):
+        caplog.clear()
+        with caplog.at_level(logging.WARNING, logger=logger):
+            found = {(r["id_a"], r["id_b"]) for r in run().collect()}
+        assert (5000, 5001) in found, path
+        assert not any(a < n and b < n for a, b in found), path  # capped away
+        assert any("over-cap" in r.message for r in caplog.records), path
 
 
 # ---------------------------------------------- multi-batch fold order
-def test_salted_equals_unsalted_across_batches(spark):
+def test_fold_composite_order_across_batches(spark):
     """line_no restarts per batch, so ordering is only defined by
     (batch_seq, line_no); the distributed fold must honor the composite
     key (round-1 bug: line_no-only ordering picked the wrong hoist)."""
@@ -253,7 +263,7 @@ def test_salted_equals_unsalted_across_batches(spark):
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
-def test_salted_equals_unsalted_randomized(spark, seed):
+def test_fold_matches_oracle_randomized(spark, seed):
     """Randomized multi-batch, multi-qid sweep: interleaved lifecycles,
     duplicate lines, expired/removed orders — the distributed fold must
     equal the pure-Python fold_lines oracle run per qid over its lines

@@ -199,6 +199,39 @@ def test_cc_long_path_converges(spark):
     assert {r["cluster_id"] for r in rows} == {0}
 
 
+def connected_components_labelprop(pairs, *, max_iter: int = 25):
+    """Oracle for :func:`dedup.connected_components`: plain min-label
+    propagation over ``(id_a, id_b)`` pairs (O(component-diameter)
+    rounds, so only for small graphs)."""
+    edges = (pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+             .unionByName(
+                 pairs.select(F.col("id_b").alias("src"),
+                              F.col("id_a").alias("dst")))
+             .distinct()
+             .localCheckpoint(eager=True))
+    labels = (edges.select(F.col("src").alias("id")).distinct()
+              .withColumn("label", F.col("id"))
+              .localCheckpoint(eager=True))
+    for _ in range(max_iter):
+        nbr_min = (edges.join(labels, edges["dst"] == labels["id"])
+                   .groupBy("src").agg(F.min("label").alias("nbr_label")))
+        new_labels = (labels.join(nbr_min, labels["id"] == nbr_min["src"],
+                                  "left")
+                      .select(F.col("id"),
+                              F.least(F.col("label"),
+                                      F.coalesce(F.col("nbr_label"),
+                                                 F.col("label")))
+                              .alias("label"))
+                      .localCheckpoint(eager=True))
+        n_changed = (new_labels.alias("n")
+                     .join(labels.alias("o"), "id")
+                     .filter(F.col("n.label") != F.col("o.label")).count())
+        labels = new_labels
+        if n_changed == 0:
+            return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
+    raise RuntimeError(f"label propagation did not converge in {max_iter}")
+
+
 def test_cc_star_matches_labelprop_on_random_graphs(spark):
     import random
     rng = random.Random(11)
@@ -210,7 +243,7 @@ def test_cc_star_matches_labelprop_on_random_graphs(spark):
         star = {(r["id"], r["cluster_id"])
                 for r in dedup.connected_components(pairs).collect()}
         prop = {(r["id"], r["cluster_id"])
-                for r in dedup.connected_components_labelprop(pairs)
+                for r in connected_components_labelprop(pairs)
                 .collect()}
         assert star == prop, f"trial {trial}"
 

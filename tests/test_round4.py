@@ -651,11 +651,12 @@ def test_try_pil_probe_is_cached(monkeypatch):
 
 # ----------------------------------- dedup: no persisted-frame leaks
 def test_verify_paths_unpersist(spark, monkeypatch):
-    """jaccard_pairs / simhash_near_duplicates must not leak cached
-    shingle/simhash frames (ADVICE finding): every DataFrame.persist()
-    made inside the verify paths is matched by an unpersist() before
-    the call returns."""
-    from log_ship_elastic_postfix_spark.operators import dedup
+    """The near-dup paths must not leak cached bucket/shingle frames
+    (ADVICE finding): every DataFrame.persist() made inside the
+    minhash, simhash and cosine paths (bucket_join_pairs and the
+    Jaccard verify) is matched by an unpersist() before the call
+    returns."""
+    from log_ship_elastic_postfix_spark.operators import dedup, similarity
 
     docs = spark.createDataFrame(
         [(i, "the quick brown fox jumps over the lazy dog number %d" % i)
@@ -689,5 +690,14 @@ def test_verify_paths_unpersist(spark, monkeypatch):
     assert n_persists >= 3, "tracking must observe the real persists"
     assert not live, "minhash verify leaked a persisted frame"
 
-    dedup.simhash_near_duplicates(docs).count()
+    dedup.simhash_verified_near_duplicates(docs).count()
     assert not live, "simhash verify leaked a persisted frame"
+
+    vecs = spark.createDataFrame(
+        [(i, [1.0, float(i % 5), 0.0, 0.5]) for i in range(40)],
+        "vec_id long, embedding array<double>")
+    before = n_persists
+    similarity.embedding_near_duplicates(vecs, dim=4).count()
+    # the bucket frame and its sizes, both in bucket_join_pairs
+    assert n_persists - before >= 2, "cosine path must bucket-join"
+    assert not live, "cosine near-dup leaked a persisted frame"
